@@ -20,6 +20,17 @@ object Bench {
       s""""cpus":${os.getAvailableProcessors},"live_procs":$procs}"""
   }
 
+  /** The cold-cache hook: drops every session memo (DfCache bases, the
+    * graph rank memo, the tf-idf document count) and the session's
+    * cached plans, so the next entry pays its standalone build. Bench's
+    * isolated reps and the dev probes' "cold" reps all run through it. */
+  private[graft] def clearSessionCaches(spark: SparkSession): Unit = {
+    graft.core.DfCache.clearAll()
+    graft.operators.Graph.rankBasesClear()
+    graft.queries.AnalysisQueries.nDocsTfMemoClear()
+    spark.catalog.clearCache()
+  }
+
   def main(args: Array[String]): Unit = {
     val hostAtStart = hostStats()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -160,16 +171,10 @@ object Bench {
     // big frames (PERF_NOTES "batch noise"), and re-measuring the rows
     // that dominate the total makes the artifact's minima
     // self-confirming instead of needing a manual isolated follow-up.
-    // Each isolated rep runs COLD-CACHE (session cache + DfCache bases +
-    // the graph rank memo cleared first): a warm rerun would exclude
-    // the one-time base build that a standalone entry pays, silently
-    // mixing two protocols in the committed minima series.
-    def clearSessionCaches(): Unit = {
-      graft.core.DfCache.clearAll()
-      graft.operators.Graph.rankBasesClear()
-      graft.queries.AnalysisQueries.nDocsTfMemoClear()
-      spark.catalog.clearCache()
-    }
+    // Each isolated rep runs COLD-CACHE (`clearSessionCaches` first):
+    // a warm rerun would exclude the one-time base build that a
+    // standalone entry pays, silently mixing two protocols in the
+    // committed minima series.
     val results =
       if (!sys.env.get("SPARK_GRAFT_BENCH_ISOLATED").contains("1")) batchResults
       else {
@@ -182,7 +187,7 @@ object Bench {
             // the batch number stays in the min: it measured the same
             // count() protocol, just under suite contention
             val best = (0 until 3).foldLeft(t) { (b, _) =>
-              clearSessionCaches()
+              clearSessionCaches(spark)
               val (tN, okN) = timed(name, fn)
               if (okN) math.min(b, tN) else b
             }

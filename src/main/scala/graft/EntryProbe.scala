@@ -16,7 +16,8 @@ object EntryProbe {
     val name = args(0)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = graft.core.LocalDirs(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -60,14 +61,8 @@ object EntryProbe {
       }
     })
 
-    def clearSessionCaches(): Unit = {
-      graft.core.DfCache.clearAll()
-      graft.operators.Graph.rankBasesClear()
-      spark.catalog.clearCache()
-    }
-
     (1 to reps).foreach { i =>
-      clearSessionCaches()
+      Bench.clearSessionCaches(spark)
       jobs.synchronized(jobs.clear())
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()

@@ -10,60 +10,17 @@ import org.apache.spark.sql.SparkSessionExtensions
   * so `SELECT count_tokens(text), split_chunks(text, 512, 64) ...` works
   * from plain SQL (including thrift/connect clients) without touching the
   * Column API. Complements `TextFunctions.register(spark)` for
-  * already-built sessions.
+  * already-built sessions; both install `TextFunctions.sqlFunctions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-  private def info(name: String): ExpressionInfo =
-    new ExpressionInfo("graft", name)
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("count_tokens"), info("count_tokens"),
-      (es: Seq[Expression]) => functions.CountTokens(es.head)))
-    e.injectFunction((FunctionIdentifier("estimate_tokens"), info("estimate_tokens"),
-      (es: Seq[Expression]) => functions.EstimateTokens(es.head)))
-    e.injectFunction((FunctionIdentifier("sequence_ratio"), info("sequence_ratio"),
-      (es: Seq[Expression]) => functions.SequenceRatio(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("truncate_tokens"), info("truncate_tokens"),
-      (es: Seq[Expression]) => functions.TruncateTokens(es(0), es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("split_chunks"), info("split_chunks"),
-      (es: Seq[Expression]) => functions.SplitChunks(es(0), es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("split_chunks_chars"), info("split_chunks_chars"),
-      (es: Seq[Expression]) => functions.SplitChunksChars(es(0), es(1), es(2), es(3))))
-    e.injectFunction((FunctionIdentifier("shingles"), info("shingles"),
-      (es: Seq[Expression]) => functions.Shingles(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("lenient_json"), info("lenient_json"),
-      (es: Seq[Expression]) => functions.LenientJsonExtract(es.head)))
-    e.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      (es: Seq[Expression]) => operators.Dedup.SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("simhash_text"), info("simhash_text"),
-      (es: Seq[Expression]) => operators.Dedup.SimHashText(es.head)))
-    e.injectFunction((FunctionIdentifier("minhash_bands"), info("minhash_bands"),
-      (es: Seq[Expression]) => functions.MinHashBands(es(0), es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("term_counts"), info("term_counts"),
-      (es: Seq[Expression]) => functions.TermCounts(es.head)))
-    e.injectFunction((FunctionIdentifier("winnow_fingerprints"), info("winnow_fingerprints"),
-      (es: Seq[Expression]) => functions.WinnowFingerprints(es(0), es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("lcs_tokens"), info("lcs_tokens"),
-      (es: Seq[Expression]) => functions.LcsTokens(es(0), es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("bigram_counts"), info("bigram_counts"),
-      (es: Seq[Expression]) => functions.BigramCounts(es.head)))
-    e.injectFunction((FunctionIdentifier("minhash_sig"), info("minhash_sig"),
-      (es: Seq[Expression]) => functions.MinHashSig(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("hash64"), info("hash64"),
-      (es: Seq[Expression]) => functions.Hash64(es.head)))
-    e.injectFunction((FunctionIdentifier("hash_family"), info("hash_family"),
-      (es: Seq[Expression]) => functions.HashFamily(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("jaro_winkler"), info("jaro_winkler"),
-      (es: Seq[Expression]) => functions.JaroWinkler(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("damerau_levenshtein"), info("damerau_levenshtein"),
-      (es: Seq[Expression]) => functions.DamerauLevenshtein(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("hamming_bytes"), info("hamming_bytes"),
-      (es: Seq[Expression]) => functions.HammingBytes(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("jaccard_bytes"), info("jaccard_bytes"),
-      (es: Seq[Expression]) => functions.JaccardBytes(es(0), es(1))))
+    functions.TextFunctions.sqlFunctions.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", name), build))
+    }
     e.injectOptimizerRule(_ => plans.TokenFilterStrengthen)
     e.injectOptimizerRule(_ => plans.UnionAggToGroupingSets)
   }

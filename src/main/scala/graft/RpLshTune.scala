@@ -29,7 +29,8 @@ object RpLshTune {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val sweep =
       if (args.nonEmpty) args(0).split(",").map(_.trim.toInt).toSeq
       else Seq(8, 10, 12)

@@ -18,7 +18,8 @@ object StreamProbe {
     val name = args(0)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     var builder = graft.core.LocalDirs(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -106,9 +107,7 @@ object StreamProbe {
       t.start()
     }
     (1 to reps).foreach { i =>
-      graft.core.DfCache.clearAll()
-      graft.operators.Graph.rankBasesClear()
-      spark.catalog.clearCache()
+      Bench.clearSessionCaches(spark)
       t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       println(f"== $name rep $i: ${ms(t0) / 1e3}%.3f s ($n rows) ==")

@@ -941,8 +941,10 @@ object TextFunctions {
     * ties Spark's array_sort falls through to comparing the value field,
     * while DuckDB's `list(v ORDER BY keys)` leaves tie order
     * unspecified — duplicate keys make the cross-engine bit-equality
-    * contract nondeterministic. Every in-repo call site keys on a unique
-    * id (vec_id / doc_id / src / pos). */
+    * contract nondeterministic. Every call site must therefore key on
+    * columns that are unique within each group (an id, a position, a
+    * term within one document, a block or bucket index — whatever the
+    * grouping leaves distinct). */
   def ordered_sum(value: Column, keys: Column*): Column = {
     import org.apache.spark.sql.functions._
     val fields = keys.zipWithIndex.map { case (k, i) => k.as(s"k$i") } :+
@@ -979,46 +981,39 @@ object TextFunctions {
       c, org.apache.spark.sql.functions.lit(Tokenizer.DuckDbTokenRegex),
       org.apache.spark.sql.functions.lit(0))
 
-  /** Register all text-kernel functions for SQL use. */
+  /** Every engine SQL function as (name, expression factory): the one
+    * list that both [[graft.GraftExtensions]] (at session build) and
+    * [[register]] (on an already-built session) install. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "count_tokens" -> (es => CountTokens(es.head)),
+    "estimate_tokens" -> (es => EstimateTokens(es.head)),
+    "sequence_ratio" -> (es => SequenceRatio(es(0), es(1))),
+    "truncate_tokens" -> (es => TruncateTokens(es(0), es(1), es(2))),
+    "split_chunks" -> (es => SplitChunks(es(0), es(1), es(2))),
+    "split_chunks_chars" -> (es => SplitChunksChars(es(0), es(1), es(2), es(3))),
+    "shingles" -> (es => Shingles(es(0), es(1))),
+    "lenient_json" -> (es => LenientJsonExtract(es.head)),
+    "simhash64" -> (es => graft.operators.Dedup.SimHash64(es.head)),
+    "simhash_text" -> (es => graft.operators.Dedup.SimHashText(es.head)),
+    "minhash_bands" -> (es => MinHashBands(es(0), es(1), es(2))),
+    "term_counts" -> (es => TermCounts(es.head)),
+    "winnow_fingerprints" -> (es => WinnowFingerprints(es(0), es(1), es(2))),
+    "lcs_tokens" -> (es => LcsTokens(es(0), es(1), es(2))),
+    "bigram_counts" -> (es => BigramCounts(es.head)),
+    "minhash_sig" -> (es => MinHashSig(es(0), es(1))),
+    "hash64" -> (es => Hash64(es.head)),
+    "hash_family" -> (es => HashFamily(es(0), es(1))),
+    "jaro_winkler" -> (es => JaroWinkler(es(0), es(1))),
+    "damerau_levenshtein" -> (es => DamerauLevenshtein(es(0), es(1))),
+    "hamming_bytes" -> (es => HammingBytes(es(0), es(1))),
+    "jaccard_bytes" -> (es => JaccardBytes(es(0), es(1))),
+  )
+
+  /** Register [[sqlFunctions]] for SQL use on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("count_tokens",
-      es => CountTokens(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("estimate_tokens",
-      es => EstimateTokens(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_ratio",
-      es => SequenceRatio(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("truncate_tokens",
-      es => TruncateTokens(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("split_chunks",
-      es => SplitChunks(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("split_chunks_chars",
-      es => SplitChunksChars(es(0), es(1), es(2), es(3)), "scala_udf")
-    reg.createOrReplaceTempFunction("shingles",
-      es => Shingles(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      es => MinHashBands(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("term_counts",
-      es => TermCounts(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hash64",
-      es => Hash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fingerprints",
-      es => WinnowFingerprints(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("hash_family",
-      es => HashFamily(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_counts",
-      es => BigramCounts(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("lcs_tokens",
-      es => LcsTokens(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler",
-      es => JaroWinkler(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("damerau_levenshtein",
-      es => DamerauLevenshtein(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming_bytes",
-      es => HammingBytes(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaccard_bytes",
-      es => JaccardBytes(es(0), es(1)), "scala_udf")
+    sqlFunctions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

@@ -596,11 +596,11 @@ object AnalysisQueries extends graft.QueryModule {
     * (dense embeddings get brute/IVF/RP-LSH; sparse vectors get THIS):
     * per-document vectors truncated to the top-10 TF-IDF terms, a query
     * set (first 100 documents — the retrieval shape: queries vs corpus,
-    * the sim_topk convention) joined through the term inverted index,
-    * pair dot products folded in term order, cosine from precomputed
-    * norms. Truncation bounds each document's posting list (the standard
-    * sparse-retrieval move); at scale the remaining hot term keys get
-    * the df-cap/salt treatment of dedup_ngram_jaccard. Truncation ranks
+    * the sim_topk convention) scored term-at-a-time against the query
+    * terms' postings, pair dot products folded in term order, cosine
+    * from precomputed norms. Truncation bounds each document's posting
+    * list (the standard sparse-retrieval move), so a corpus row costs at
+    * most 10 posting-list walks over at most 100 queries. Truncation ranks
     * on the ROUNDED weight so cross-engine ulp noise in ln can't change
     * which terms survive.
     *
@@ -627,43 +627,67 @@ object AnalysisQueries extends graft.QueryModule {
     * (the collocations trick); the per-doc counts are one wordcount
     * shuffle. */
   def sparseSimBigram(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.loadSpread(spark, dir, "documents")
-    // map-side bigram tf (one fused pass, no wordcount shuffle) — the
-    // same kernel discipline as term_counts for the unigram family.
     // Bigram features are this query's own (not family-shared), so the
     // tf persist is query-local: released after the output materializes.
-    val tf = docs.select(col("doc_id"),
-        explode(graft.functions.TextFunctions.bigram_counts(col("text")))
-          .as(Seq("term", "tf")))
+    val docs = Tables.loadSpread(spark, dir, "documents")
+    val tf = bigramTf(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = sparseSimOver(docs, tf)
     tf.unpersist(blocking = false)
     out
   }
 
+  /** Map-side bigram tf `(doc_id, term, tf)` (one fused pass, no
+    * wordcount shuffle) — the same kernel discipline as term_counts for
+    * the unigram family. */
+  private[graft] def bigramTf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(graft.functions.TextFunctions.bigram_counts(col("text")))
+        .as(Seq("term", "tf")))
+
   /** Core of the sparse-cosine family. `tf` must already be materialized
     * (persisted by the caller or read through [[cachedTf]]) — it feeds
     * both the df branch and the scoring branch, and Catalyst doesn't CSE
-    * across self-references. The output is localCheckpointed before
-    * return, so callers may release a query-local tf immediately. */
+    * across self-references. The output is stableCheckpointed before
+    * return, so callers may release a query-local tf immediately.
+    *
+    * The pair dot products come from the term-at-a-time accumulator
+    * kernel ([[graft.operators.SparseDotKernel]]): the <= 100 query
+    * vectors are collected into a postings index shipped with the scan's
+    * tasks, and each corpus vector scores against it in one pass,
+    * folding every pair in ascending term
+    * order (the `ordered_sum(wa*wb, term)` order the oracle replays).
+    * The corpus side never moves and no per-pair group is ever formed;
+    * only touched pairs are emitted, and only those above the cosine
+    * cut survive. */
   private def sparseSimOver(docs: DataFrame, tf: DataFrame): DataFrame = {
+    val vecs = sparseVectors(docs, tf)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val out = sparseCosine(graft.operators.SparseDotKernel.pairDots(
+        vecs.filter(col("doc_id") < 100), vecs))
+      .stableCheckpoint()
+    vecs.unpersist(blocking = false)
+    out
+  }
+
+  /** Truncated tf-idf vectors `(doc_id, nrm, tk)`: the top-10
+    * `(w, term)` structs per document and the norm of that vector.
+    *
+    * Truncation via the partial top-k aggregate, NOT a row_number
+    * window: 10 rows per (doc, partition) cross the shuffle instead of
+    * the full (doc, term) table, and nothing is fully sorted. The heap
+    * keeps the lexicographically largest (w, term) structs, so the tie
+    * break at equal weight is term DESC — mirrored in the oracle.
+    *
+    * Fused norm (r18, guide §2.4): the document norm is a fold over the
+    * SAME truncated vector the top-k aggregation just built (term-ASC
+    * ordered fold — the oracle's list_reduce(list(w ORDER BY term)))
+    * instead of a second aggregation pass. The interpreted HOF cost is
+    * bounded: <= 10 elements per document row, once per document. */
+  private[graft] def sparseVectors(docs: DataFrame, tf: DataFrame): DataFrame = {
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    // truncation via the partial top-k aggregate, NOT a row_number
-    // window: 10 rows per (doc, partition) cross the shuffle instead of
-    // the full (doc, term) table, and nothing is fully sorted. The heap
-    // keeps the lexicographically largest (w, term) structs, so the tie
-    // break at equal weight is term DESC — mirrored in the oracle.
-    //
-    // Fused norm (r18, guide §2.4): the document norm is a fold over the
-    // SAME truncated vector the top-k aggregation just built, so it is
-    // computed here from the 10-element array (term-ASC ordered fold —
-    // exactly the old second aggregation's ordered_sum(w*w, term) and
-    // the oracle's list_reduce(list(w ORDER BY term))) instead of a
-    // second aggregation pass + two broadcast-build jobs over the
-    // exploded postings. The interpreted HOF cost is bounded: ≤ 10
-    // elements per document row, once per document.
-    val agg0 = tf.join(broadcast(dft), "term").crossJoin(broadcast(nDocs))
+    tf.join(broadcast(dft), "term").crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("term"),
         round(col("tf") * log(col("n_docs") * lit(1.0) / col("df")), 6).as("w"))
       .groupBy(col("doc_id"))
@@ -673,35 +697,13 @@ object AnalysisQueries extends graft.QueryModule {
         array_sort(transform(col("tk"),
           e => struct(e("term").as("t"), e("w").as("w")))),
         lit(0.0), (acc, e) => acc + e("w") * e("w"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // query postings broadcast: the corpus-side index never moves for
-    // the join; only the surviving pair contributions shuffle (by pair)
-    // for the ordered fold. Each side carries its doc's norm (one
-    // double per posting row) so the cosine needs NO norm re-joins —
-    // within a (doc_a, doc_b) group the norms are constant, so max()
-    // reads back exactly the value the old broadcast joins attached.
-    val a = agg0.filter(col("doc_id") < 100)
-      .select(col("doc_id").as("doc_a"), col("nrm").as("na"),
-        explode(col("tk")).as("e"))
-      .select(col("doc_a"), col("na"), col("e.term").as("term"),
-        col("e.w").as("wa"))
-    val b = agg0
-      .select(col("doc_id").as("doc_b"), col("nrm").as("nb"),
-        explode(col("tk")).as("e"))
-      .select(col("doc_b"), col("nb"), col("e.term").as("term"),
-        col("e.w").as("wb"))
-    val out = b.join(broadcast(a), "term").filter(col("doc_a") =!= col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(graft.functions.TextFunctions.ordered_sum(
-        col("wa") * col("wb"), col("term")).as("dot"),
-        max(col("na")).as("na"), max(col("nb")).as("nb"))
-      .withColumn("cos", col("dot") / (col("na") * col("nb")))
+  }
+
+  /** Cosine cut over `(doc_a, doc_b, dot, na, nb)` pair dot products. */
+  private[graft] def sparseCosine(dots: DataFrame): DataFrame =
+    dots.withColumn("cos", col("dot") / (col("na") * col("nb")))
       .filter(col("cos") > 0.5)
       .select(col("doc_a"), col("doc_b"), round(col("cos"), 6).as("cos"))
-      .stableCheckpoint()
-    agg0.unpersist(blocking = false)
-    out
-  }
 
   /** Scale-safe percentile rank: percent_rank without the global sort.
     * The value DISTRIBUTION (distinct value -> count) is dimension-sized;
