@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness for the ~90 ms per-SQL-action driver floor (r17 "Not yet
   * optimized" #1). Decomposes the floor: fresh-plan analysis/planning
   * cost, per-task launch cost (task-count scaling), per-job cost (AQE
@@ -13,28 +11,8 @@ import org.apache.spark.sql.SparkSession
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(300)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    var builder = graft.core.LocalDirs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000")) // see Bench
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "262144")) // see Bench
-      .config("spark.ui.enabled", "false")
-    // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (dev-only, see StreamProbe)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").filter(_.nonEmpty)
-      .foreach(_.split(";").foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Metrics.register(spark)
+    val spark = graft.core.GraftSession()
+    val cpus = graft.core.GraftSession.cpus
     import org.apache.spark.sql.functions._
     val sc = spark.sparkContext
 
@@ -72,7 +50,7 @@ object FloorProbe {
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     time("sql action: agg.collect, shuffle.partitions=8")(
       spark.range(100).agg(sum("id")).collect())
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
 
     // no shuffle: single-stage SQL action
     time("sql action: range(100).filter.collect [no shuffle]")(

@@ -91,16 +91,7 @@ object RunPipeline {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Metrics.register(spark)
+    val spark = graft.core.GraftSession()
     val ts = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")
       .format(java.time.LocalDateTime.now())
     run(spark, cfg, ts)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** 10× scale-frame generator — the measurement companion of
@@ -61,14 +61,7 @@ object ScaleUp {
     val out = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
     val skew = args.length > 3 && args(3) == "zipf"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
 
     // pairwise-distant copy tags: same-payload variants across copies
     // must not sit within the pair queries' small edit/Hamming radii

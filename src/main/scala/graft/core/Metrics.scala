@@ -6,8 +6,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Surfaces `Dataset.observe` metrics (cap/drop counters on the dedup
   * operators) to the log, so bounded-coverage decisions are never silent.
-  * Register once per session from a main (`Verify`, `Bench`, `Profile`);
-  * specs read `qe.observedMetrics` directly instead.
+  * Every session built by [[GraftSession]] registers it: every main and
+  * the test suite's. Specs assert on `qe.observedMetrics` directly.
   */
 object Metrics {
   def register(spark: SparkSession): Unit =

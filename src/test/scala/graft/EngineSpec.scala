@@ -71,14 +71,12 @@ class EngineSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects all kernel functions") {
-    // a fresh SparkSession can't be built in the shared test JVM (the
-    // extensions only apply at session construction); the end-to-end path
-    // is exercised via spark-shell with spark.sql.extensions (see verify
-    // skill). Here: injection runs cleanly and registers the function set.
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(exts)
-    // and the session-level registration path covers SQL resolution:
-    graft.functions.TextFunctions.register(spark)
+    // the shared session is built by GraftSession with
+    // spark.sql.extensions=graft.GraftExtensions, so the functions
+    // resolve from plain SQL with no TextFunctions.register call
+    val unresolved = graft.functions.TextFunctions.sqlFunctions.map(_._1)
+      .filterNot(n => scala.util.Try(spark.sql(s"DESCRIBE FUNCTION $n").collect()).isSuccess)
+    assert(unresolved.isEmpty, unresolved)
     val r = spark.sql(
       "SELECT count_tokens('hello world') AS c").collect()(0)
     assert(r.getAs[Int]("c") == 2)

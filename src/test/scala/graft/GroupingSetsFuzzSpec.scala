@@ -86,22 +86,24 @@ class GroupingSetsFuzzSpec extends SparkSpec {
     graft.core.Tables.load(spark, sf, "events")
       .createOrReplaceTempView("graft_gs_events")
     var fired = 0
+    def hasUnion(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union])
     forAll(shapeGen, 100) { sh =>
       val q = shapeSql(sh)
-      val prev = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations =
-        prev :+ graft.plans.UnionAggToGroupingSets
-      val (on, collapsed) =
-        try {
-          val df = spark.sql(q)
-          // fired <=> the Union is gone (COUNT(DISTINCT) can introduce
-          // its own Expand, so Expand presence is not the right signal)
-          (df.collect().map(_.toString).sorted.toSeq,
-            !df.queryExecution.optimizedPlan.exists(
-              _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]))
-        } finally spark.experimental.extraOptimizations = prev
+      val onDf = spark.sql(q)
+      // fired <=> the Union is gone (COUNT(DISTINCT) can introduce
+      // its own Expand, so Expand presence is not the right signal)
+      val collapsed = !hasUnion(onDf)
+      val on = onDf.collect().map(_.toString).sorted.toSeq
       if (collapsed) fired += 1
-      val off = spark.sql(q).collect().map(_.toString).sorted.toSeq
+      val off = withoutRules(graft.plans.UnionAggToGroupingSets) {
+        val df = spark.sql(q)
+        // the baseline must really be rule-off, or on == off compares
+        // the rewrite with itself
+        if (collapsed) assert(hasUnion(df), s"rule-off plan lost its Union for:\n$q")
+        df.collect().map(_.toString).sorted.toSeq
+      }
       assert(on == off, s"rule changed results for:\n$q")
     }
     // the property is vacuous if the generator never produces a

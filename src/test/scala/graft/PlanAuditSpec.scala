@@ -670,61 +670,55 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("accuracy family: union of per-dim aggregates collapses to ONE grouping-sets pass") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev :+ graft.plans.UnionAggToGroupingSets
-    try {
-      val df = graft.queries.Relational.accuracySets(spark, sf)
-      val optimized = df.queryExecution.optimizedPlan
-      assert(!optimized.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
-        s"union must collapse:\n$optimized")
-      assert(optimized.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Expand]),
-        s"expected the grouping-sets Expand:\n$optimized")
-      val physical = df.queryExecution.executedPlan.toString
-      assert(physical.split("events").length - 1 >= 1)
-      assert(physical.split("Scan parquet").length - 1 == 1,
-        s"the family must cost ONE scan:\n$physical")
-      // semantics: identical rows to the naive (rule-off) union
-      val rows = df.collect().map(_.toString).sorted.toSeq
-      spark.experimental.extraOptimizations = prev
+    val df = graft.queries.Relational.accuracySets(spark, sf)
+    val optimized = df.queryExecution.optimizedPlan
+    assert(!optimized.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+      s"union must collapse:\n$optimized")
+    assert(optimized.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Expand]),
+      s"expected the grouping-sets Expand:\n$optimized")
+    val physical = df.queryExecution.executedPlan.toString
+    assert(physical.split("events").length - 1 >= 1)
+    assert(physical.split("Scan parquet").length - 1 == 1,
+      s"the family must cost ONE scan:\n$physical")
+    // semantics: identical rows to the naive (rule-off) union
+    val rows = df.collect().map(_.toString).sorted.toSeq
+    val naiveRows = withoutRules(graft.plans.UnionAggToGroupingSets) {
       val naive = graft.queries.Relational.accuracySets(spark, sf)
+      assert(naive.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]))
       assert(!naive.queryExecution.optimizedPlan.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Expand]))
-      assert(rows == naive.collect().map(_.toString).sorted.toSeq)
-    } finally spark.experimental.extraOptimizations = prev
+      naive.collect().map(_.toString).sorted.toSeq
+    }
+    assert(rows == naiveRows)
   }
 
   test("grouping-sets rule leaves non-collapsible unions alone") {
     import graft.core.Tables
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev :+ graft.plans.UnionAggToGroupingSets
-    try {
-      val ev = Tables.load(spark, sf, "events")
-      // different measures per branch: must NOT collapse
-      val u1 = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .union(ev.groupBy(col("event_type"))
-          .agg(sum(col("user_id")).as("n")))
-      assert(u1.queryExecution.optimizedPlan.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
-        "measure mismatch must keep the union")
-      // different inputs per branch: must NOT collapse
-      val u2 = ev.filter(col("user_id") > 10).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .union(ev.groupBy(col("event_type")).agg(count(lit(1)).as("n")))
-      assert(u2.queryExecution.optimizedPlan.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
-        "different bases must keep the union")
-      // hidden grouping key (grouped but not projected): must NOT collapse
-      val u3 = ev.groupBy(col("event_type"), col("user_id") % 2)
-        .agg(count(lit(1)).as("n")).select(col("event_type"), col("n"))
-        .union(ev.groupBy(col("event_type")).agg(count(lit(1)).as("n")))
-      assert(u3.queryExecution.optimizedPlan.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
-        "hidden grouping keys must keep the union")
-    } finally spark.experimental.extraOptimizations = prev
+    val ev = Tables.load(spark, sf, "events")
+    // different measures per branch: must NOT collapse
+    val u1 = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+      .union(ev.groupBy(col("event_type"))
+        .agg(sum(col("user_id")).as("n")))
+    assert(u1.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+      "measure mismatch must keep the union")
+    // different inputs per branch: must NOT collapse
+    val u2 = ev.filter(col("user_id") > 10).groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .union(ev.groupBy(col("event_type")).agg(count(lit(1)).as("n")))
+    assert(u2.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+      "different bases must keep the union")
+    // hidden grouping key (grouped but not projected): must NOT collapse
+    val u3 = ev.groupBy(col("event_type"), col("user_id") % 2)
+      .agg(count(lit(1)).as("n")).select(col("event_type"), col("n"))
+      .union(ev.groupBy(col("event_type")).agg(count(lit(1)).as("n")))
+    assert(u3.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+      "hidden grouping keys must keep the union")
   }
 
   test("fightin words: top-k is the partial aggregate, never a global row sort") {

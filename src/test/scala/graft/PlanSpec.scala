@@ -7,53 +7,46 @@ import graft.plans.TokenFilterStrengthen
 
 class PlanSpec extends SparkSpec {
 
-  private def withRule[T](f: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ TokenFilterStrengthen
-    try f finally spark.experimental.extraOptimizations = prev
-  }
-
   // NB: queryExecution.optimizedPlan is cached per DataFrame — each probe
-  // must build a FRESH plan inside/outside the rule scope.
+  // must build a FRESH plan inside/outside the rule-off scope.
   private def probe() =
     spark.read.parquet(s"$sf/documents.parquet")
       .filter(count_tokens(col("text")) > 80).select(col("doc_id"))
 
   test("TokenFilterStrengthen adds a length bound before the tokenizer") {
-    val base = probe().queryExecution.optimizedPlan.toString
-    assert(!base.contains("length("), s"unexpected length predicate in:\n$base")
-    withRule {
-      val plan = probe().queryExecution.optimizedPlan.toString
-      assert(plan.contains("length(") && plan.contains("count_tokens("),
-        s"expected strengthened filter in:\n$plan")
-      // the derived conjunct must come first (short-circuit order)
-      assert(plan.indexOf("length(") < plan.indexOf("count_tokens("))
+    val base = withoutRules(TokenFilterStrengthen) {
+      probe().queryExecution.optimizedPlan.toString
     }
+    assert(!base.contains("length("), s"unexpected length predicate in:\n$base")
+    val plan = probe().queryExecution.optimizedPlan.toString
+    assert(plan.contains("length(") && plan.contains("count_tokens("),
+      s"expected strengthened filter in:\n$plan")
+    // the derived conjunct must come first (short-circuit order)
+    assert(plan.indexOf("length(") < plan.indexOf("count_tokens("))
   }
 
   test("TokenFilterStrengthen preserves results and reaches fixpoint") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val baseline = docs.filter(count_tokens(col("text")) > 80)
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    withRule {
-      val q = docs.filter(count_tokens(col("text")) > 80 && col("doc_id") >= 0)
-        .select(col("doc_id"))
-      val got = q.collect().map(_.getLong(0)).toSet
-      assert(got == baseline)
-      // exactly ONE derived conjunct even though the optimizer runs the
-      // rule repeatedly (semanticEquals guard)
-      val plan = q.queryExecution.optimizedPlan.toString
-      assert("length\\(".r.findAllIn(plan).size == 1, plan)
+    val baseline = withoutRules(TokenFilterStrengthen) {
+      val df = docs.filter(count_tokens(col("text")) > 80).select(col("doc_id"))
+      assert(!df.queryExecution.optimizedPlan.toString.contains("length("))
+      df.collect().map(_.getLong(0)).toSet
     }
+    val q = docs.filter(count_tokens(col("text")) > 80 && col("doc_id") >= 0)
+      .select(col("doc_id"))
+    val got = q.collect().map(_.getLong(0)).toSet
+    assert(got == baseline)
+    // exactly ONE derived conjunct even though the optimizer runs the
+    // rule repeatedly (semanticEquals guard)
+    val plan = q.queryExecution.optimizedPlan.toString
+    assert("length\\(".r.findAllIn(plan).size == 1, plan)
   }
 
   test("rule ignores upper bounds (no unsound rewrite)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    withRule {
-      val plan = docs.filter(count_tokens(col("text")) < 150)
-        .select(col("doc_id")).queryExecution.optimizedPlan.toString
-      assert(!plan.contains("length("), plan)
-    }
+    val plan = docs.filter(count_tokens(col("text")) < 150)
+      .select(col("doc_id")).queryExecution.optimizedPlan.toString
+    assert(!plan.contains("length("), plan)
   }
 
   test("filters push to the parquet scan; projections prune the read schema") {

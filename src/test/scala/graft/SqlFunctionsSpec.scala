@@ -15,9 +15,11 @@ class SqlFunctionsSpec extends SparkSpec {
     val names = TextFunctions.sqlFunctions.map(_._1)
     assert(names.distinct.size == names.size)
     assert(Seq("lenient_json", "simhash64", "simhash_text").forall(names.contains))
-    // a fresh session state: none of the engine functions exist yet, so
-    // the probe below tells a registered name from an unknown one
+    // a fresh session state carries the extension functions; drop them
+    // so the probe below tells a registered name from an unknown one
     val s = spark.newSession()
+    names.foreach(n => s.sessionState.functionRegistry.dropFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
     assert(names.filter(resolves(s, _)).isEmpty)
     TextFunctions.register(s)
     assert(names.filterNot(resolves(s, _)).isEmpty)
